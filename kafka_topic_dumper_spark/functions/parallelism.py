@@ -40,6 +40,12 @@ from pyspark.sql import DataFrame
 # semanticHash only canonicalizes the analyzed plan (no physical
 # planning); a hash collision could at worst reuse the other plan's
 # spread DECISION — a partitioning choice, never a result change.
+# Caveats: the memo assumes its input is immutable — a parquet file
+# rewritten in place under the same plan keeps its first width
+# decision until the application restarts — and it clears ALL entries
+# when it reaches the cap rather than evicting one (bounded memory,
+# one re-probe per plan afterwards). sources/tables.py's schema memo
+# follows the same clear-when-full policy.
 _PROBE_MEMO: dict[tuple[str, int, int], bool] = {}
 _PROBE_MEMO_CAP = 4096  # bench/test sessions construct thousands of plans
 

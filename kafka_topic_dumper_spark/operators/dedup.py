@@ -949,14 +949,13 @@ def minhash_signatures(docs: DataFrame, k: int = 32, portable: bool = True) -> D
         else F.abs(F.xxhash64("shingle")) % F.lit(HASH_DOMAIN31)
     )
     sh = shingled(docs).withColumn("h", hash_col)
-    mins = [
-        F.min((F.col("h") * F.lit(a) + F.lit(b)) % F.lit(MERSENNE61)).alias(f"m{i}")
-        for i, (a, b) in enumerate(minhash_params(k))
-    ]
-    sig = sh.groupBy("doc_id").agg(*mins)
-    return sig.select(
-        "doc_id", F.array(*[F.col(f"m{i}") for i in range(k)]).alias("sig")
+    # ONE parsed expression for all k mins + the array: as Column algebra
+    # every F.* call is a py4j round trip (~70 per permutation). The
+    # optimized plan is the same Aggregate either way.
+    mins = ", ".join(
+        f"min(((h * {a}) + {b}) % {MERSENNE61})" for a, b in minhash_params(k)
     )
+    return sh.groupBy("doc_id").agg(F.expr(f"array({mins}) AS sig"))
 
 
 def minhash_band_keys(
@@ -964,25 +963,18 @@ def minhash_band_keys(
 ) -> DataFrame:
     """(doc_id, band, band_key): the signature split into ``bands``
     keys — one explode (×bands), no join. The band key is
-    md5(concat_ws(',', band-slice)) — fixed-width, engine-portable."""
-    band_cols = [
-        F.struct(
-            F.lit(bi).alias("band"),
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col("sig")[i]
-                        for i in range(bi * rows_per_band, (bi + 1) * rows_per_band)
-                    ],
-                )
-            ).alias("band_key"),
-        )
+    md5(concat_ws(',', band-slice)) — fixed-width, engine-portable.
+    The band structs are one parsed expression (see
+    :func:`minhash_signatures`)."""
+    band_cols = ", ".join(
+        f"struct({bi} AS band, md5(concat_ws(',', "
+        + ", ".join(f"sig[{i}]" for i in range(bi * rows_per_band, (bi + 1) * rows_per_band))
+        + ")) AS band_key)"
         for bi in range(bands)
-    ]
-    return sig.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("bk")
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
+    )
+    return sig.selectExpr("doc_id", f"explode(array({band_cols})) AS bk").selectExpr(
+        "doc_id", "bk.band AS band", "bk.band_key AS band_key"
+    )
 
 
 def minhash_lsh_candidates(

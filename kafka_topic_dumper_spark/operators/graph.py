@@ -863,16 +863,19 @@ def pagerank_dangling_oracle_sql(
     The base relations are ``MATERIALIZED`` CTEs: each of the
     ``iters`` unrolled steps references edges/deg/sinks/nn, and
     letting DuckDB inline them re-opens the parquet per reference —
-    10 sweeps × 4 scans trips the process fd limit."""
+    10 sweeps × 4 scans trips the process fd limit. The step CTEs are
+    ``MATERIALIZED`` too, a planner hint only: each ``r{i}`` references
+    ``r{i-1}`` twice (rank sum and dangling mass), so inlining expands
+    the chain ~2^iters times and runs DuckDB out of memory."""
     teleport = PR_SCALE * (100 - damping_pct) // 100
     steps = [
-        f"""r0 AS (
+        f"""r0 AS MATERIALIZED (
             SELECT node, CAST({PR_SCALE} AS BIGINT) AS r FROM nodes
         )"""
     ]
     for i in range(1, iters + 1):
         steps.append(
-            f"""r{i} AS (
+            f"""r{i} AS MATERIALIZED (
             SELECT n.node,
                    CAST({teleport} + ({damping_pct} *
                         (coalesce(s.s, 0) + dm.dm // nn.n)) // 100

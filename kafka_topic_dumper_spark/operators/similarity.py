@@ -125,9 +125,11 @@ def self_dot_udf():
 
 
 def _as_double_vec(df: DataFrame, id_alias: str, vec_alias: str) -> DataFrame:
-    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    return df.select(
-        F.col("vec_id").alias(id_alias), v.alias(vec_alias)
+    # SQL strings, not Python lambdas: each HOF lambda built as Column
+    # algebra costs tens of py4j round trips; the plan is the same.
+    return df.selectExpr(
+        f"vec_id AS {id_alias}",
+        f"transform(embedding, x -> CAST(x AS DOUBLE)) AS {vec_alias}",
     ).withColumn(
         f"{vec_alias}_nrm",
         # JVM HOF fold, NOT self_dot_udf: the norm column chains into
@@ -137,7 +139,10 @@ def _as_double_vec(df: DataFrame, id_alias: str, vec_alias: str) -> DataFrame:
         # arrow-dot+HOF-norm 0.54s, arrow-dot+arrow-norm 0.80s —
         # stage-chaining overhead exceeds the fold cost; a standalone
         # corpus-wide norm pass is where self_dot_udf wins instead).
-        F.sqrt(_dsum(F.transform(F.col(vec_alias), lambda x: x * x))),
+        F.expr(
+            f"sqrt(aggregate(transform({vec_alias}, x -> x * x), 0.0D,"
+            " (acc, x) -> acc + x))"
+        ),
     )
 
 

@@ -110,8 +110,11 @@ def contamination_overlap(
     )
 
 
-def _count_in(tokens: Column, words: list[str]) -> Column:
-    return F.size(F.filter(tokens, lambda t: t.isin(words))).cast("integer")
+def _count_in(tokens: str, words: list[str]) -> Column:
+    """How many elements of array column ``tokens`` are in ``words`` —
+    one parsed expression, not a py4j round trip per word."""
+    listed = ", ".join(f"'{w}'" for w in words)
+    return F.expr(f"CAST(size(filter({tokens}, t -> t IN ({listed}))) AS INT)")
 
 
 def lang_id(docs: DataFrame) -> DataFrame:
@@ -138,7 +141,7 @@ def lang_id(docs: DataFrame) -> DataFrame:
         "lang",
         "text",
         *[
-            _count_in(F.col("toks"), words).alias(f"_s_{lang}")
+            _count_in("toks", words).alias(f"_s_{lang}")
             for lang, words in STOPWORDS.items()
         ],
     )
@@ -188,7 +191,7 @@ def quality_score(docs: DataFrame, extra_cols: tuple = ()) -> DataFrame:
             F.length("text").cast("bigint")
             - F.length(F.regexp_replace(F.col("text"), r"[.,;:!?]", ""))
         ).cast("bigint").alias("_punct"),
-        _count_in(F.col("_toks"), STOPWORDS["en"]).cast("bigint").alias("_sw"),
+        _count_in("_toks", STOPWORDS["en"]).cast("bigint").alias("_sw"),
     )
     n_tokens = F.col("n_tokens")
     punct_ratio = F.col("_punct") / F.col("n_chars")

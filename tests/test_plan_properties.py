@@ -6,6 +6,8 @@ timings."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from kafka_topic_dumper_spark import registry
@@ -81,6 +83,40 @@ def test_ngram_jaccard_df_cap_rides_one_index_shuffle(spark):
     assert "LeftAnti" not in plan
     assert "SortMergeJoin" not in plan  # the only joins left broadcast
     assert count_in(plan, "Generate explode") >= 2
+
+
+def test_minhash_one_doc_exchange_per_signature_and_one_band_explode(spark):
+    """The 32 MinHash mins are ONE doc_id aggregation over ONE doc_id
+    exchange (partial mins map-side), and the 8 band keys are ONE
+    explode of an 8-struct array over its output — whichever way the
+    builder spells the expressions."""
+    key = "spark.sql.debug.maxToStringFields"  # default 25 hides mins
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "1000")
+    try:
+        lines = plan_of(spark, "dedup_minhash_lsh").splitlines()
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+    def n_mins(line: str, fn: str) -> int:
+        return len(re.findall(rf"(?<!\w){fn}\(", line))
+
+    finals = [
+        i
+        for i, ln in enumerate(lines)
+        if "HashAggregate(keys=[doc_id#" in ln
+        and n_mins(ln, "min") == 32
+        and n_mins(ln, "partial_min") == 0
+    ]
+    assert finals, "no 32-min signature aggregate in the plan"
+    for i in finals:
+        assert "Exchange hashpartitioning(doc_id#" in lines[i + 1]
+        assert n_mins(lines[i + 2], "partial_min") == 32
+        assert "Generate explode(array(" in lines[i - 1]
+        assert lines[i - 1].count("struct(band, ") == 8
 
 
 def test_multimodal_meta_prunes_payload_and_stays_jvm(spark):
