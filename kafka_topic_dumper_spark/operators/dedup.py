@@ -20,7 +20,7 @@ All pure DataFrame ops — no Python in the row path.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_topic_dumper_spark.functions.portable_hash import (
@@ -977,6 +977,61 @@ def minhash_band_keys(
     )
 
 
+def _banded_pairs(
+    banded: DataFrame,
+    band_cols: tuple[str, str],
+    id_col: str,
+    pair_cols: tuple[str, str],
+    *payload: Column,
+) -> DataFrame:
+    """Distinct candidate pairs of a banded relation: self-join on its
+    two band columns with ``a.<id> < b.<id>`` (no self-pairs, each
+    unordered pair once however many bands it shares). The ids come
+    out as ``pair_cols``; ``payload`` columns, written over the ``a.``
+    and ``b.`` sides, ride along into the distinct. The prune step of
+    every banded near-dup operator here: MinHash LSH, banded hamming
+    (simhash, the phash stub, phash-DCT) and embedding sign-LSH.
+
+    Callers decide whether to persist ``banded`` before calling; this
+    join never does. Each choice below was timed both ways on the
+    registry row (sf0.01, local[4] on 4 vCPU, single samples, same
+    rows both ways), as chosen vs flipped:
+
+    - :func:`minhash_lsh_candidates` does NOT persist. ReuseExchange
+      already serves both join sides from one signature-chain run
+      (18 ``ReusedExchange`` nodes in dedup_minhash_lsh's executed
+      plan), and its consumers disagree on the flip: a persist speeds
+      up dedup_minhash_lsh (1.31 → 1.07 s) but slows
+      graph_triangle_counts (1.78 → 3.45 s).
+    - :func:`banded_hamming_pairs` persists by default
+      (``persist_index``). Reuse does fire without it (dedup_simhash
+      then plans a ``ReusedExchange``), but the persist is faster:
+      dedup_simhash 0.38 vs 0.43 s, multimodal_phash_dct_neardup 0.70
+      vs 1.05 s. The phash stub opts out; its fingerprint is one md5
+      projection and the flip is flat (0.25 vs 0.24 s).
+    - :func:`embedding_neardup_lsh` persists, so the hyperplane kernel
+      runs once per vector (0.74 vs 0.73 s, flat).
+    - ``similarity.knn_graph`` keeps its own ordered-pair join over a
+      persisted index (0.81 vs 1.06 s without)."""
+    band, key = band_cols
+    a = banded.alias("a")
+    b = banded.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col(f"a.{band}") == F.col(f"b.{band}"))
+            & (F.col(f"a.{key}") == F.col(f"b.{key}"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .select(
+            F.col(f"a.{id_col}").alias(pair_cols[0]),
+            F.col(f"b.{id_col}").alias(pair_cols[1]),
+            *payload,
+        )
+        .distinct()
+    )
+
+
 def minhash_lsh_candidates(
     sig: DataFrame, bands: int = 8, rows_per_band: int = 4
 ) -> DataFrame:
@@ -984,27 +1039,13 @@ def minhash_lsh_candidates(
     bucket — a self-join keyed by (band, band_key), never all-pairs.
     NOTE the output is still quadratic IN EACH BUCKET; for the
     cluster-assignment consumer that only needs connectivity, use
-    :func:`minhash_cluster_dedup`'s star-edge form instead.
-
-    NO persist on the banded index, deliberately (r18 A/B): every
-    registered consumer materializes the candidate set exactly once
-    (verify_pairs_exact_jaccard persists ``pairs``; the graph rows
-    persist their edge relations), and within that one materialization
-    ReuseExchange already serves both self-join sides from a single
-    signature-chain execution — a persist here measured a ~3% LOSS on
-    the full dedup_minhash_lsh row (2.18 → 2.25 s probe protocol)."""
-    banded = minhash_band_keys(sig, bands, rows_per_band)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
+    :func:`minhash_cluster_dedup`'s star-edge form instead. The banded
+    index is not persisted (see :func:`_banded_pairs`)."""
+    return _banded_pairs(
+        minhash_band_keys(sig, bands, rows_per_band),
+        ("band", "band_key"),
+        "doc_id",
+        ("doc_a", "doc_b"),
     )
 
 
@@ -1077,9 +1118,7 @@ def minhash_star_edges(docs: DataFrame, k: int = 32, bands: int = 8) -> DataFram
     the bucket-min aggregate and the join-back both shuffle by
     (band, band_key) over the identical subtree, so ReuseExchange
     already materializes the signature chain once — adding a persist
-    measured 1.79 → 2.08 s (pure materialization overhead). Contrast
-    :func:`minhash_lsh_candidates`, where the self-join's reuse does
-    NOT fire and the persist wins."""
+    measured 1.79 → 2.08 s (pure materialization overhead)."""
     banded = minhash_band_keys(minhash_signatures(docs, k), bands, k // bands)
     mins = banded.groupBy("band", "band_key").agg(F.min("doc_id").alias("src"))
     return (
@@ -1169,15 +1208,9 @@ def banded_hamming_pairs(
     multimodal dedup — at scale the banded index is the precomputed
     artifact, partitioned by (band, band_key).
 
-    The banded relation feeds BOTH sides of the self-join and Catalyst
-    does not reuse the aliased subtrees here, so without a persist the
-    whole fingerprint pipeline upstream (e.g. the two chained Arrow
-    stages of synth→phash-DCT, or simhash's double groupBy) executes
-    twice — the same double-derivation knn_graph's banded index
-    already pins against (r18: phash_dct_neardup 1.99 → 1.17 s).
-    ``persist_index=False`` opts out for callers whose fingerprint is
-    a trivial projection (the md5 phash stub measured +20% WITH the
-    persist — materialization costs more than recomputing one md5)."""
+    ``persist_index`` persists the banded relation before the
+    self-join; see :func:`_banded_pairs` for which callers opt out and
+    the measurements behind each choice."""
     from kafka_topic_dumper_spark.functions.caching import tracked_persist
 
     band_bits = nbits // n_bands
@@ -1206,23 +1239,13 @@ def banded_hamming_pairs(
     )
     if persist_index:
         banded = tracked_persist(banded)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.expr("CAST(bit_count(a.fp ^ b.fp) AS INT)").alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    return _banded_pairs(
+        banded,
+        ("band", "band_key"),
+        "doc_id",
+        ("doc_a", "doc_b"),
+        F.expr("CAST(bit_count(a.fp ^ b.fp) AS INT)").alias("hamming"),
+    ).filter(F.col("hamming") <= max_hamming)
 
 
 def simhash_near_pairs(
@@ -1310,25 +1333,12 @@ def embedding_neardup_lsh(
     )
 
     base = _as_double_vec(emb, "vec_id", "v")
-    # the banded index feeds both sides of the candidate self-join —
-    # persist so the hyperplane dot products run once per vector.
     # Bucketing runs over the RAW embedding column (computed columns
     # hit the Catalyst lambda-inlining trap — see lsh_bucket_expr).
     banded = tracked_persist(lsh_banded(
         emb.select("vec_id", "embedding"), "vec_id", "embedding", dim, nbits, n_tables
     ))
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.tbl") == F.col("b.tbl"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-        .distinct()
-    )
+    cand = _banded_pairs(banded, ("tbl", "bucket"), "vec_id", ("vec_a", "vec_b"))
     va = base.select(
         F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("v_nrm").alias("na")
     )

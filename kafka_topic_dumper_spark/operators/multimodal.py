@@ -329,10 +329,9 @@ def phash_neardup(docs: DataFrame, max_hamming: int = 4) -> DataFrame:
     shape as text simhash, applied to the binary column.
 
     ``persist_index=False``: the stub fingerprint is one md5
-    projection — recomputing it per self-join side is cheaper than
-    materializing the banded index (r18 A/B: 0.36 s without vs
-    0.43 s with; contrast the DCT pipeline, where the persist wins
-    big)."""
+    projection, cheap to recompute per self-join side (measurements in
+    ``dedup._banded_pairs``; contrast the DCT pipeline, where the
+    persist wins)."""
     from kafka_topic_dumper_spark.operators.dedup import banded_hamming_pairs
 
     return banded_hamming_pairs(

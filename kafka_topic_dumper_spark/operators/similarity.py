@@ -487,6 +487,9 @@ def knn_graph(
     )
     a = banded.alias("a")
     b = banded.alias("b")
+    # ordered pairs: dedup._banded_pairs' `<` join plus its mirrored
+    # union gave the same rows (2,439 at sf0.01) but ran slower, median
+    # 0.925 vs 0.864 s over 10 interleaved runs at local[4], 4 vCPU
     cand = (
         a.join(
             b,
@@ -679,7 +682,16 @@ def cell_ranks_udf(cids: list[int], cmat: list[list[float]], cnrm: list[float]):
     dimensions — the exact IEEE op sequence of
     ``pair_dot / (v_nrm * c_nrm)`` (see :func:`pair_dot_udf`), so cell
     assignments and tie-breaks are bit-identical to the expansion form
-    and to the DuckDB oracle."""
+    and to the DuckDB oracle.
+
+    The kernel comes back marked non-deterministic, like
+    :func:`lsh_banded`'s: it is a pure function, but a join or explode
+    on the ranks makes Catalyst infer a not-null filter on them and
+    push it below the projection, which runs the full-corpus kernel
+    twice (two ``ArrowEvalPython [_ranks]`` nodes over one scan, the
+    inferred Filter between them). The mark keeps one evaluation with
+    the filter above it. Every caller calls it on a relation it has
+    already filtered, so none needs a filter pushed past it."""
 
     @F.pandas_udf("array<bigint>")
     def _ranks(v, vn):
@@ -707,7 +719,7 @@ def cell_ranks_udf(cids: list[int], cmat: list[list[float]], cnrm: list[float]):
                     out[r] = ids[row].tolist()
         return _pd.Series(out)
 
-    return _ranks
+    return _ranks.asNondeterministic()
 
 
 def ivf_codebook(emb: DataFrame, n_centroids: int = 16):
@@ -830,20 +842,9 @@ def ivf_topk(
     the source instead of re-assigning.
     """
     base = _as_double_vec(emb, "vec_id", "v")
-    ranks = cell_ranks_udf(*(codebook or ivf_codebook(emb, n_centroids)))
-    # Corpus-side assignment runs through a NONDETERMINISTIC instance
-    # of the (pure) kernel (r19, guide §4.4 — the §14 lsh_banded
-    # pattern): joining ``assigned`` on "cell" makes Catalyst infer
-    # isnotnull(cell) and push it below this projection, re-evaluating
-    # the full-corpus centroid-ranking UDF — the r19 before-plan shows
-    # two ArrowEvalPython[_ranks] nodes over the corpus scan with the
-    # inferred Filter between them. The mark forbids the duplication
-    # (one evaluation; the inferred filter stays above), and the
-    # query-side legs below filter BEFORE calling the kernel, so no
-    # consumer needs a filter pushed past it.
-    assigned = base.withColumn(
-        "cells", ranks.asNondeterministic()(F.col("v"), F.col("v_nrm"))
-    ).select("vec_id", "v", "v_nrm", F.col("cells")[0].alias("cell"))
+    codebook = codebook or ivf_codebook(emb, n_centroids)
+    ranks = cell_ranks_udf(*codebook)
+    assigned = ivf_assign(emb, codebook=codebook)
     qbase = base.filter(F.col("vec_id").isin(query_ids))
     probes = qbase.withColumn(
         "cells", ranks(F.col("v"), F.col("v_nrm"))
@@ -1110,20 +1111,13 @@ def ivfpq_topk(
     refinement) is the production next step; it changes only the
     encode kernel's input, not the plan shape. NULL embeddings are
     excluded up front — see :func:`pq_topk`."""
-    base = _as_double_vec(emb.filter(F.col("embedding").isNotNull()), "vec_id", "v")
-    ranks = cell_ranks_udf(*ivf_codebook(emb, n_centroids))
+    live = emb.filter(F.col("embedding").isNotNull())
+    base = _as_double_vec(live, "vec_id", "v")
+    codebook = ivf_codebook(emb, n_centroids)
+    ranks = cell_ranks_udf(*codebook)
     cb = pq_codebook(emb, m, ksub)
-    # Nondeterministic instance on the corpus leg + pre-filtered probe
-    # leg — same §4.4 inferred-isnotnull(cell) duplication fix as
-    # ivf_topk above (this join exhibited the identical two-
-    # ArrowEvalPython[_ranks] corpus plan).
-    codes = base.withColumn(
-        "cells", ranks.asNondeterministic()(F.col("v"), F.col("v_nrm"))
-    ).select(
-        "vec_id",
-        "v_nrm",
-        F.col("cells")[0].alias("cell"),
-        pq_codes_udf(cb)(F.col("v")).alias("codes"),
+    codes = ivf_assign(live, codebook=codebook).select(
+        "vec_id", "v_nrm", "cell", pq_codes_udf(cb)(F.col("v")).alias("codes")
     )
     probes = base.filter(F.col("vec_id").isin(query_ids)).withColumn(
         "cells", ranks(F.col("v"), F.col("v_nrm"))
@@ -1185,9 +1179,12 @@ def rp_score_chain(qpfx: str, npfx: str, rp_dim: int = RP_DIM) -> str:
 def rp_project(emb: DataFrame, id_alias: str, col_prefix: str = "p") -> DataFrame:
     """Johnson-Lindenstrauss sketch: project the 64-dim embedding onto
     RP_DIM Rademacher (±1) directions, as
-    ``aggregate(zip_with(emb, signs, (x,s) -> s·x), 0.0,
+    ``aggregate(zip_with(slice(emb, 1, 64), signs, (x,s) -> s·x), 0.0,
     (acc,p) -> acc + p)`` — signed products zipped with a CONSTANT
-    sign array, then a left-associated sum.
+    sign array, then a left-associated sum. The slice reads the first
+    64 dims, as the DuckDB chain reads ``v[1..64]``: ``zip_with``
+    null-pads the shorter array, so a longer unsliced embedding would
+    project to NULL.
 
     r18 moved this off the 64-term straight-line ± chain (16 of them,
     twice — corpus and query side) whose ~2k-node expression trees put
@@ -1219,7 +1216,7 @@ def rp_project(emb: DataFrame, id_alias: str, col_prefix: str = "p") -> DataFram
         signs = ", ".join("1.0D" if s > 0 else "-1.0D" for s in plane)
         cols.append(
             F.expr(
-                f"aggregate(zip_with(embedding, array({signs}), "
+                f"aggregate(zip_with(slice(embedding, 1, {len(plane)}), array({signs}), "
                 "(x, s) -> s * CAST(x AS DOUBLE)), CAST(0 AS DOUBLE), "
                 "(acc, p) -> acc + p)"
             ).alias(f"{col_prefix}{j}")
@@ -2141,14 +2138,11 @@ def register(reg) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
 
         def _build(path: str) -> None:
-            base = _as_double_vec(emb, "vec_id", "v")
-            ranks = cell_ranks_udf(*ivf_codebook(emb, 16))
             write_ivfpq_index(
-                base.withColumn("cells", ranks(F.col("v"), F.col("v_nrm")))
-                .select(
+                ivf_assign(emb, 16).select(
                     "vec_id",
-                    F.col("v_nrm"),
-                    F.col("cells")[0].alias("cell"),
+                    "v_nrm",
+                    "cell",
                     pq_codes_udf(pq_codebook(emb))(F.col("v")).alias("codes"),
                 ),
                 path,

@@ -337,3 +337,19 @@ def test_rp_sketch_recall_floor_and_beats_noise(spark):
     noise_expectation = similarity.RP_POOL / n  # 0.2 at this 500-vec SF
     assert got >= 0.5, f"RP sketch recall degraded: {got:.2f}"
     assert got - noise_expectation >= 0.3, (got, noise_expectation)
+
+
+def test_rp_project_reads_first_64_dims_of_a_wider_embedding(spark):
+    """A 65-dim row projects to the same 16 sketch values as its first
+    64 dims — the DuckDB chain reads v[1..64] — instead of NULL from
+    zip_with's null padding."""
+    head = [float((7 * j) % 11 - 5) for j in range(64)]
+    df = spark.createDataFrame(
+        [(0, head), (1, head + [3.0])], "vec_id long, embedding array<float>"
+    )
+    rows = {
+        r["id"]: [r[f"p{j}"] for j in range(similarity.RP_DIM)]
+        for r in similarity.rp_project(df, "id").collect()
+    }
+    assert None not in rows[0]
+    assert rows[1] == rows[0]

@@ -555,3 +555,37 @@ def test_cotrading_projection_topk_rule_and_bound(spark):
     # bound: with k=3 everything pairs; never more than S*C(k,2)
     full = cotrading_projection(li, od, top_k=3).collect()
     assert len(full) <= 2 * 3
+
+
+def test_banded_pairs_distinct_ordered_with_payload(spark):
+    """The shared banded self-join: a pair sharing two bands comes out
+    once, every pair is ordered a < b, no doc pairs with itself, equal
+    keys in different bands never match, and payload columns written
+    over the a/b sides ride along."""
+    from kafka_topic_dumper_spark.operators.dedup import _banded_pairs
+
+    banded = spark.createDataFrame(
+        [
+            (1, 0, "x", 10),
+            (2, 0, "x", 20),
+            (1, 1, "y", 10),
+            (2, 1, "y", 20),
+            (5, 2, "w", 50),
+            (3, 2, "w", 30),
+            (6, 0, "solo", 60),
+            (7, 0, "q", 70),
+            (8, 1, "q", 80),
+        ],
+        "doc_id long, band int, band_key string, fp long",
+    )
+    out = _banded_pairs(
+        banded,
+        ("band", "band_key"),
+        "doc_id",
+        ("doc_a", "doc_b"),
+        F.col("a.fp").alias("fp_a"),
+        F.col("b.fp").alias("fp_b"),
+    )
+    assert out.columns == ["doc_a", "doc_b", "fp_a", "fp_b"]
+    rows = sorted(tuple(r) for r in out.collect())
+    assert rows == [(1, 2, 10, 20), (3, 5, 30, 50)]

@@ -228,22 +228,18 @@ def test_pq_stored_probe_reads_codes_only(spark, tmp_path):
 def _build_ivfpq(spark, tmp_path) -> str:
     from kafka_topic_dumper_spark.functions.index_store import write_ivfpq_index
     from kafka_topic_dumper_spark.operators.similarity import (
-        _as_double_vec,
-        cell_ranks_udf,
-        ivf_codebook,
+        ivf_assign,
         pq_codebook,
         pq_codes_udf,
     )
 
     emb = load_table(spark, SF, "embeddings")
     path = str(tmp_path / "ivfpq_index")
-    base = _as_double_vec(emb, "vec_id", "v")
-    ranks = cell_ranks_udf(*ivf_codebook(emb, 16))
     write_ivfpq_index(
-        base.withColumn("cells", ranks(F.col("v"), F.col("v_nrm"))).select(
+        ivf_assign(emb, 16).select(
             "vec_id",
-            F.col("v_nrm"),
-            F.col("cells")[0].alias("cell"),
+            "v_nrm",
+            "cell",
             pq_codes_udf(pq_codebook(emb))(F.col("v")).alias("codes"),
         ),
         path,

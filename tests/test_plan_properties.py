@@ -119,6 +119,35 @@ def test_minhash_one_doc_exchange_per_signature_and_one_band_explode(spark):
         assert lines[i - 1].count("struct(band, ") == 8
 
 
+def test_ivf_corpus_kernel_runs_once_below_inferred_filter(spark):
+    """The corpus leg's centroid-ranking kernel is ONE ArrowEvalPython
+    over the embeddings scan, with the join's inferred
+    isnotnull(ranks[0]) Filter above it, not pushed below a second
+    copy of the kernel. The other _ranks node is the probe leg, which
+    filters to the query ids before calling the kernel."""
+    qe = registry.QUERIES["similarity_topk_ivf"](spark, SF)._jdf.queryExecution()
+    lines = qe.optimizedPlan().toString().splitlines()
+    ranks = [i for i, ln in enumerate(lines) if "ArrowEvalPython [_ranks(" in ln]
+    assert len(ranks) == 2, ranks
+
+    def leg(i: int) -> list[str]:
+        # the node's subtree: following lines indented deeper than it
+        depth = len(lines[i]) - len(lines[i].lstrip(" :|+-"))
+        out = []
+        for ln in lines[i + 1 :]:
+            if len(ln) - len(ln.lstrip(" :|+-")) <= depth:
+                break
+            out.append(ln)
+        return out
+
+    corpus = [i for i in ranks if not any(" IN (" in ln for ln in leg(i))]
+    assert len(corpus) == 1, "expected one corpus-leg _ranks node"
+    i = corpus[0]
+    assert "ArrowEvalPython" not in "\n".join(leg(i))
+    assert "Relation [" in leg(i)[-1]
+    assert "Filter" in lines[i - 1] and "isnotnull(pythonUDF" in lines[i - 1]
+
+
 def test_multimodal_meta_prunes_payload_and_stays_jvm(spark):
     plan = plan_of(spark, "multimodal_binary_meta")
     # metadata projection must not invoke Python at all
